@@ -370,7 +370,8 @@ def maintain_triangle_count(
 
     from data_ingestion_resolution_platform_spark.util import local_df
 
-    row = stats.read().collect()[0]
+    # the stats table is keyed by ``metric`` and may carry other rows
+    row = stats.read().filter(F.col("metric") == "triangles").collect()[0]
     counts = local_df(
         stats.spark,
         [

@@ -57,6 +57,8 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from data_ingestion_resolution_platform_spark.util import release_checkpoint
+
 #: CDF change_type → contribution sign
 _SIGN = {
     "insert": 1,
@@ -531,6 +533,15 @@ def maintain_topk(
     Displaced rows leave the view through the MERGE delete clause;
     rides the view's epoch ledger.
 
+    Lineage cut: the touched groups' stored rows, ``dirty_groups``
+    (broadcast into three branches) and ``new_top`` (read by the
+    displaced anti-join and the MERGE batch) are localCheckpoint'ed
+    eagerly and released on exit. Left lazy, the MERGE plan inlines
+    these subtrees — and everything upstream of them — several times
+    over; the cost is driver-side planning of the repeated subtrees,
+    not only extra jobs, so ``persist()`` (which keeps the lineage in
+    every plan) does not recover it.
+
     Column contract: ``changes`` = view columns + ``change_col``;
     ``base_after`` must contain every view column (project the ordering
     measure into the feed upstream, e.g. ``nb = length(content)``).
@@ -543,9 +554,9 @@ def maintain_topk(
     # the feed fans out into pos / neg / touched and re-enters the batch
     # plan several times; one persisted evaluation keeps a potentially
     # expensive upstream (a changelog's time-travel diff) from being
-    # recomputed per branch, while everything downstream stays lazy so
-    # the single MERGE action evaluates the whole tree once
+    # recomputed per branch
     changes = changes.persist()
+    vtouched = dirty_groups = new_top = None
     try:
         pos = changes.filter(
             F.col(change_col).isin("insert", "update_postimage")
@@ -554,17 +565,23 @@ def maintain_topk(
             F.col(change_col).isin("delete", "update_preimage")
         ).select(*keys)
         touched = changes.select(*gk).distinct()
+        # the stored rows of the touched groups (≤ k per group); lineage
+        # cut: read by the dirty probe, the clean re-rank and the
+        # displaced anti-join
         if view.exists():
             vtouched = view.read().join(F.broadcast(touched), on=gk, how="left_semi")
         else:
             vtouched = pos.limit(0)
+        vtouched = vtouched.localCheckpoint(eager=True)
         # dirty = a retraction key matches a stored row (exact key match,
-        # not a value compare — ties make value compares ambiguous)
+        # not a value compare — ties make value compares ambiguous).
+        # Lineage cut: it is broadcast into three branches below.
         dirty_groups = (
             vtouched.select(*keys)
             .join(F.broadcast(neg_keys), on=keys, how="left_semi")
             .select(*gk)
             .distinct()
+            .localCheckpoint(eager=True)
         )
         order = F.expr(order_expr)
         ordering = [order.desc() if descending else order.asc()] + [
@@ -590,7 +607,9 @@ def maintain_topk(
         rescan = base_after.select(*cols).join(
             F.broadcast(dirty_groups), on=gk, how="left_semi"
         )
-        new_top = new_clean.unionByName(topk(rescan))
+        # lineage cut: new_top feeds both the displaced anti-join and
+        # the MERGE batch
+        new_top = new_clean.unionByName(topk(rescan)).localCheckpoint(eager=True)
         displaced = vtouched.select(*keys).join(
             new_top.select(*keys), on=keys, how="left_anti"
         )
@@ -615,6 +634,8 @@ def maintain_topk(
         )
     finally:
         changes.unpersist()
+        for frame in (vtouched, dirty_groups, new_top):
+            release_checkpoint(frame)
 
 
 def delta_join(

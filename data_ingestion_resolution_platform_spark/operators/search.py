@@ -232,8 +232,8 @@ def vocab_topk(
 #
 # Reference analogue: none (the reference has no search); this extends
 # its "keep every read model continuously fresh" merge discipline
-# (/root/reference/backend/services/resolution.py:36-74) to lexical
-# retrieval.
+# (the resolution endpoints, reference `backend/main.py:205-312`,
+# SURVEY.md §0) to lexical retrieval.
 
 
 def term_changes(

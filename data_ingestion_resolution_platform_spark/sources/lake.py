@@ -370,6 +370,8 @@ class LakeTable:
         os.makedirs(root, exist_ok=True)
         self.ledger = _EpochLedger(root)
         self.versions = _Versioned(root)
+        # ((version dir, its mtime), inferred schema) of the last read
+        self._schema_memo = None
 
     # -- reads -----------------------------------------------------------
     @property
@@ -446,11 +448,20 @@ class LakeTable:
         if v == 0:
             raise FileNotFoundError(f"lake table {self.root} has no committed version")
         d = self.versions.dir_for(v)
-        if not os.path.isdir(d):
+        try:
+            stamp = (d, os.stat(d).st_mtime_ns)
+        except FileNotFoundError:
             raise FileNotFoundError(
                 f"version {v} of {self.root} is missing (vacuumed or never written)"
-            )
-        return self.spark.read.parquet(d)
+            ) from None
+        # a committed version dir is immutable, so its schema is
+        # inferred once: inference opens a footer in a Spark job, and a
+        # maintainer reads the same version twice (probe, then MERGE)
+        if self._schema_memo and self._schema_memo[0] == stamp:
+            return self.spark.read.schema(self._schema_memo[1]).parquet(d)
+        df = self.spark.read.parquet(d)
+        self._schema_memo = (stamp, df.schema)
+        return df
 
     def current_version(self) -> int:
         return self.versions.current()

@@ -37,8 +37,68 @@ from data_ingestion_resolution_platform_spark.sources.lake import (
     PartitionedLakeTable,
 )
 from data_ingestion_resolution_platform_spark.streaming.lineage import epoch_summary, lineage_rows
-from data_ingestion_resolution_platform_spark.util import empty_df
+from data_ingestion_resolution_platform_spark.util import empty_df, release_checkpoint
 from data_ingestion_resolution_platform_spark.streaming.schema_evolution import reconcile_exprs
+
+
+class EpochDelta:
+    """One epoch's view delta, built once and shared by every maintained
+    view (the reference worker's ``process_job`` likewise updates every
+    read model from one pass over a job; see the module docstring).
+
+    :meth:`build` materialises two small frames, both
+    localCheckpoint'ed eagerly so every view plans over stored blocks
+    instead of re-deriving the lazy resolve subtree and re-probing the
+    target: ``images``, the batch's winners projected to ``cols``
+    (``_deleted`` marks deletes), and ``pre``, the pre-merge target
+    rows for the batch keys — ONE broadcast semi-join per epoch, never
+    a target shuffle or rescan (``None`` before the first commit).
+    ``before`` is the lazy pre-merge target snapshot, scanned only by
+    the top-k back-fills."""
+
+    def __init__(self, keys: list[str]):
+        self.keys = keys
+        self.images = self.pre = self.before = None
+
+    def build(self, winners: DataFrame, target, cols: list[str]) -> None:
+        deleted = (F.col("op") == "D").alias("_deleted")
+        self.images = winners.select(*cols, deleted).localCheckpoint(eager=True)
+        if target.exists():
+            self.before = target.read()
+            batch_keys = F.broadcast(self.images.select(*self.keys))
+            self.pre = (
+                self.before.join(batch_keys, on=self.keys, how="left_semi")
+                .select(*cols)
+                .localCheckpoint(eager=True)
+            )
+
+    def _post(self, proj) -> DataFrame:
+        return self.images.filter(~F.col("_deleted")).select(*proj)
+
+    def cdf(self, *proj) -> DataFrame:
+        """The invertible mini-CDF projected to ``proj``: pre-images
+        (``update_preimage``, sign -1) ∪ surviving winners
+        (``update_postimage``, sign +1)."""
+        post = self._post(proj).withColumn("change_type", F.lit("update_postimage"))
+        if self.pre is None:
+            return post
+        pre = self.pre.select(*proj).withColumn("change_type", F.lit("update_preimage"))
+        return pre.unionByName(post)
+
+    def base_after(self, *proj) -> DataFrame:
+        """The LOGICAL post-epoch state projected to ``proj`` (target
+        minus batch keys, plus surviving winners), lazy."""
+        post = self._post(proj)
+        if self.before is None:
+            return post
+        rest = self.before.join(
+            F.broadcast(self.images.select(*self.keys)), on=self.keys, how="left_anti"
+        )
+        return rest.select(*proj).unionByName(post)
+
+    def release(self) -> None:
+        release_checkpoint(self.images)
+        release_checkpoint(self.pre)
 
 
 @dataclass
@@ -75,9 +135,10 @@ class CDCPipeline:
     # opt-in incrementally-maintained metrics table (operators/ivm.py):
     # per-stats_key row counts + content bytes kept in lock-step with
     # the target WITHOUT ever rescanning it — the epoch's pre-images
-    # (current target rows for the batch keys, a broadcast semi-join)
-    # and post-images (the winners) form an invertible mini-CDF whose
-    # signed delta advances the aggregate.
+    # (current target rows for the batch keys) and post-images (the
+    # winners) form an invertible mini-CDF whose signed delta advances
+    # the aggregate. Every view reads that CDF from one EpochDelta per
+    # epoch: one broadcast semi-join of the target, however many views.
     maintain_stats: bool = False
     stats_keys: tuple[str, ...] = ("repo",)
     # opt-in SCD2 history table (operators/scd.py): every attribute
@@ -284,6 +345,7 @@ class CDCPipeline:
             max_candidates=10,
             wide_cols=["content"],
         )
+        delta = None
         try:
             # resolve_and_detect returns lazily; the persisted per-key
             # aggregate materializes inside the first consumer below, so
@@ -305,29 +367,31 @@ class CDCPipeline:
                 fl.result()
             phases["resolve_audit"] = _time.time() - _t0
             _t0 = _time.time()
-            # maintained metrics BEFORE the target merge: the pre-images
+            # maintained views BEFORE the target merge: the pre-images
             # must be read from the pre-merge target, and this ordering
-            # keeps the retry story convergent — if the stats MERGE
-            # commits but the target MERGE then fails, redelivery skips
-            # the stats epoch (its own ledger) and re-runs the target
-            # merge from the same deterministic winners. The reverse
-            # order would strand the stats forever behind the target's
+            # keeps the retry story convergent — if a view MERGE commits
+            # but the target MERGE then fails, redelivery skips that
+            # view's epoch (its own ledger) and re-runs the target merge
+            # from the same deterministic winners, rebuilding the same
+            # delta from the still-uncommitted target. The reverse order
+            # would strand the views forever behind the target's
             # committed-epoch early return.
-            if self.stats is not None:
-                self._maintain_stats(resolved.winners, epoch)
-            if self.view is not None:
-                # same pre-merge / own-ledger / convergent-retry
-                # contract as the stats (comment above)
-                self._maintain_view(resolved.winners, epoch)
-            if self.leaderboard is not None:
-                # same contract again (pre-merge, own ledger)
-                self._maintain_leaderboard(resolved.winners, epoch)
-            if self.freq is not None:
-                # same contract again (pre-merge, own ledger)
-                self._maintain_freq(resolved.winners, epoch)
-            if self.qsample is not None:
-                # same contract again (pre-merge, own ledger)
-                self._maintain_quantiles(resolved.winners, epoch)
+            maintainers = [
+                (self.stats, self._maintain_stats),
+                (self.view, self._maintain_view),
+                (self.leaderboard, self._maintain_leaderboard),
+                (self.freq, self._maintain_freq),
+                (self.qsample, self._maintain_quantiles),
+            ]
+            if any(table is not None for table, _ in maintainers):
+                # every column a view projects: the keys and the payload
+                # attributes (the view expressions range over these)
+                cols = [*self.keys, "commit", "lang", "content", *self.view_attrs]
+                delta = EpochDelta(list(self.keys))
+                delta.build(resolved.winners, self.target, list(dict.fromkeys(cols)))
+                for table, maintain in maintainers:
+                    if table is not None:
+                        maintain(delta, epoch)
             if self.history is not None:
                 # SCD2 history from the RAW batch (every event is a
                 # potential version boundary, not just winners) —
@@ -382,80 +446,48 @@ class CDCPipeline:
                 pass
             raise
         finally:
+            if delta is not None:
+                delta.release()
             resolved.unpersist()
         return stats
 
-    def _maintain_stats(self, winners: DataFrame, epoch: int) -> None:
+    def _maintain_stats(self, delta: EpochDelta, epoch: int) -> None:
         """Advance the maintained per-``stats_keys`` aggregate (row
         count + content bytes) by this epoch's delta.
 
-        The epoch's CDF is synthesized from what the MERGE is about to
-        do: current target rows for the batch keys are the pre-images
-        (every one is replaced or deleted → sign -1), surviving winners
-        are the post-images (sign +1). Unchanged re-deliveries cancel
-        exactly (-x + x = 0). The target is only touched by ONE
-        broadcast semi-join on the (small) batch key set — never a full
-        rescan, never a shuffle of the target."""
+        The epoch's CDF is the shared :class:`EpochDelta`: current
+        target rows for the batch keys are the pre-images (every one is
+        replaced or deleted → sign -1), surviving winners are the
+        post-images (sign +1). Unchanged re-deliveries cancel exactly
+        (-x + x = 0)."""
         from data_ingestion_resolution_platform_spark.operators.ivm import (
             maintain_aggregate,
         )
 
-        key_list = list(self.keys)
-        cols = [*key_list, "lang", "content"]
-        post = (
-            winners.filter(F.col("op") != "D")
-            .select(*cols, F.lit("update_postimage").alias("change_type"))
-        )
-        if self.target.exists():
-            pre = (
-                self.target.read()
-                .join(F.broadcast(winners.select(*key_list)), on=key_list, how="left_semi")
-                .select(*cols, F.lit("update_preimage").alias("change_type"))
-            )
-            cdf = pre.unionByName(post)
-        else:
-            cdf = post
         maintain_aggregate(
             self.stats,
-            cdf,
+            delta.cdf(*self.keys, "lang", "content"),
             list(self.stats_keys),
             {"total_bytes": "length(content)"},
             epoch_id=f"m{epoch}",
             count_alias="n_paths",
         )
 
-    def _maintain_freq(self, winners: DataFrame, epoch: int) -> None:
+    def _maintain_freq(self, delta: EpochDelta, epoch: int) -> None:
         """Advance the maintained count-min cells by this epoch's delta
         (``operators/sketch.py maintain_cms``).
 
-        Same invertible mini-CDF as ``_maintain_stats`` (pre-images =
-        current target rows for the batch keys via ONE broadcast
-        semi-join, post-images = surviving winners; unchanged
-        re-deliveries cancel exactly), same pre-merge / own-ledger /
-        convergent-retry contract. Only the epoch's delta ever shuffles
-        — ≤ depth·|batch| exploded rows combining to ≤ depth·width
-        cells."""
+        Same shared mini-CDF and pre-merge / own-ledger /
+        convergent-retry contract as ``_maintain_stats``. Only the
+        epoch's delta ever shuffles — ≤ depth·|batch| exploded rows
+        combining to ≤ depth·width cells."""
         from data_ingestion_resolution_platform_spark.operators.sketch import (
             maintain_cms,
         )
 
-        key_list = list(self.keys)
-        cols = [*key_list, "commit", "lang", "content"]
-        post = winners.filter(F.col("op") != "D").select(
-            *cols, F.lit("update_postimage").alias("change_type")
-        )
-        if self.target.exists():
-            pre = (
-                self.target.read()
-                .join(F.broadcast(winners.select(*key_list)), on=key_list, how="left_semi")
-                .select(*cols, F.lit("update_preimage").alias("change_type"))
-            )
-            cdf = pre.unionByName(post)
-        else:
-            cdf = post
         maintain_cms(
             self.freq,
-            cdf,
+            delta.cdf(*self.keys, "commit", "lang", "content"),
             self.freq_item,
             depth=self.freq_depth,
             width=self.freq_width,
@@ -470,48 +502,31 @@ class CDCPipeline:
             raise ValueError("seed_dim requires maintain_view=True")
         return self.dim.merge(dim, [self.view_join_key], epoch_id=epoch_id)
 
-    def _maintain_view(self, winners: DataFrame, epoch: int) -> None:
+    def _maintain_view(self, delta: EpochDelta, epoch: int) -> None:
         """Advance the maintained ``target ⋈ dim`` view by this feed
-        epoch's R-side delta (ΔS is empty here; dim changes arrive via
-        :meth:`apply_dim_changes`).
+        epoch's R-side delta (the shared mini-CDF; dim changes arrive
+        via :meth:`apply_dim_changes`).
 
-        Same invertible mini-CDF as ``_maintain_stats``: pre-images are
-        the current target rows for the batch keys (ONE broadcast
-        semi-join, never a target shuffle or rescan), post-images are
-        the surviving winners. ``maintain_join`` broadcasts the delta
-        against the dim, so epoch cost is O(|batch|)."""
+        ΔS is empty here, so the R₀ ⋈ ΔS terms vanish and R₀ is passed
+        as an empty frame — the target is never read for them.
+        ``maintain_join`` broadcasts the delta against the dim, so epoch
+        cost is O(|batch|)."""
         from data_ingestion_resolution_platform_spark.operators.ivm import maintain_join
 
         if not self.dim.exists():
             raise ValueError(
                 "maintain_view=True but the dim table is unseeded — call seed_dim() first"
             )
-        key_list = list(self.keys)
-        cols = [*key_list, *self.view_attrs]
-        post = winners.filter(F.col("op") != "D").select(
-            *cols, F.lit("update_postimage").alias("change_type")
-        )
-        if self.target.exists():
-            pre = (
-                self.target.read()
-                .join(F.broadcast(winners.select(*key_list)), on=key_list, how="left_semi")
-                .select(*cols, F.lit("update_preimage").alias("change_type"))
-            )
-            r_changes = pre.unionByName(post)
-            r_before = self.target.read().select(*cols)
-        else:
-            r_changes = post
-            r_before = post.drop("change_type").limit(0)
+        r_changes = delta.cdf(*self.keys, *self.view_attrs)
         s_before = self.dim.read()
-        s_changes = s_before.limit(0).withColumn("change_type", F.lit("insert"))
         maintain_join(
             self.view,
             r_changes,
-            s_changes,
-            r_before=r_before,
+            s_before.limit(0).withColumn("change_type", F.lit("insert")),
+            r_before=r_changes.drop("change_type").limit(0),
             s_before=s_before,
             join_keys=[self.view_join_key],
-            out_keys=key_list,
+            out_keys=list(self.keys),
             epoch_id=f"v{epoch}",
         )
 
@@ -521,44 +536,24 @@ class CDCPipeline:
         lb_val = F.expr(self.leaderboard_order).cast("long").alias("lb_val")
         return gk, rk, [*gk, *rk, lb_val]
 
-    def _maintain_leaderboard(self, winners: DataFrame, epoch: int) -> None:
+    def _maintain_leaderboard(self, delta: EpochDelta, epoch: int) -> None:
         """Advance the maintained per-``leaderboard_keys`` top-k view by
         this epoch's delta (``operators/ivm.py maintain_topk``).
 
-        Same invertible mini-CDF as ``_maintain_stats``; runs pre-merge
-        on its own ledger for the same convergent-retry argument. The
+        Same shared mini-CDF as ``_maintain_stats``; runs pre-merge on
+        its own ledger for the same convergent-retry argument. The
         back-fill base must be the POST-epoch state, but the physical
         target merge happens after — so it is constructed LOGICALLY
-        (target minus batch keys, plus surviving winners), lazily: the
-        back-fill only evaluates it for groups a retraction dirtied,
-        semi-pruned inside maintain_topk."""
+        (``EpochDelta.base_after``), lazily: the back-fill only
+        evaluates it for groups a retraction dirtied, semi-pruned
+        inside maintain_topk."""
         from data_ingestion_resolution_platform_spark.operators.ivm import maintain_topk
 
-        key_list = list(self.keys)
         gk, rk, proj = self._leaderboard_proj()
-        post = winners.filter(F.col("op") != "D").select(
-            *proj, F.lit("update_postimage").alias("change_type")
-        )
-        if self.target.exists():
-            pre = (
-                self.target.read()
-                .join(F.broadcast(winners.select(*key_list)), on=key_list, how="left_semi")
-                .select(*proj, F.lit("update_preimage").alias("change_type"))
-            )
-            changes = pre.unionByName(post)
-            base_after = (
-                self.target.read()
-                .join(F.broadcast(winners.select(*key_list)), on=key_list, how="left_anti")
-                .select(*proj)
-                .unionByName(winners.filter(F.col("op") != "D").select(*proj))
-            )
-        else:
-            changes = post
-            base_after = winners.filter(F.col("op") != "D").select(*proj)
         maintain_topk(
             self.leaderboard,
-            changes,
-            base_after,
+            delta.cdf(*proj),
+            delta.base_after(*proj),
             gk,
             rk,
             "lb_val",
@@ -584,7 +579,7 @@ class CDCPipeline:
         qs_val = F.expr(self.quantile_value).cast("long").alias("qs_val")
         return gk, rk, [*gk, *rk, qs_h, qs_val]
 
-    def _maintain_quantiles(self, winners: DataFrame, epoch: int) -> None:
+    def _maintain_quantiles(self, delta: EpochDelta, epoch: int) -> None:
         """Advance the maintained per-``quantile_keys`` uniform sample by
         this epoch's delta — ``operators/ivm.py maintain_topk`` with
         ``descending=False`` over the key hash, so the view invariant is
@@ -594,38 +589,16 @@ class CDCPipeline:
         full table state, `/root/reference/backend/main.py:103-107` —
         here as a distribution, not a count, and never rescanned).
 
-        Same invertible pre/post mini-CDF and pre-merge / own-ledger /
-        convergent-retry contract as ``_maintain_leaderboard``: the
-        back-fill base is the LOGICAL post-epoch state (target minus
-        batch keys, plus surviving winners), evaluated lazily and only
-        for groups a retraction dirtied."""
+        Same shared mini-CDF, logical back-fill base and pre-merge /
+        own-ledger / convergent-retry contract as
+        ``_maintain_leaderboard``."""
         from data_ingestion_resolution_platform_spark.operators.ivm import maintain_topk
 
-        key_list = list(self.keys)
         gk, rk, proj = self._quantiles_proj()
-        post = winners.filter(F.col("op") != "D").select(
-            *proj, F.lit("update_postimage").alias("change_type")
-        )
-        if self.target.exists():
-            pre = (
-                self.target.read()
-                .join(F.broadcast(winners.select(*key_list)), on=key_list, how="left_semi")
-                .select(*proj, F.lit("update_preimage").alias("change_type"))
-            )
-            changes = pre.unionByName(post)
-            base_after = (
-                self.target.read()
-                .join(F.broadcast(winners.select(*key_list)), on=key_list, how="left_anti")
-                .select(*proj)
-                .unionByName(winners.filter(F.col("op") != "D").select(*proj))
-            )
-        else:
-            changes = post
-            base_after = winners.filter(F.col("op") != "D").select(*proj)
         maintain_topk(
             self.qsample,
-            changes,
-            base_after,
+            delta.cdf(*proj),
+            delta.base_after(*proj),
             gk,
             rk,
             "qs_h",

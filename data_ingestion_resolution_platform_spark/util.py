@@ -141,3 +141,18 @@ def reuse_for_self_join(df: DataFrame) -> DataFrame:
     survivable mid-query.
     """
     return df.localCheckpoint(eager=False)
+
+
+def release_checkpoint(df: DataFrame | None) -> None:
+    """Drop the stored blocks behind a ``localCheckpoint``'ed frame now.
+
+    ``DataFrame.unpersist`` does not reach them: a local checkpoint is a
+    persisted RDD under a ``LogicalRDD`` plan, not a cache entry, so
+    without this its blocks wait for ``ContextCleaner``'s periodic GC
+    (30 min by default) — in a long-running stream that is every
+    epoch's checkpoints piling up in executor storage. ``df`` must be
+    the frame ``localCheckpoint`` returned, not a projection of it.
+    Safe to call twice; ``None`` is a no-op.
+    """
+    if df is not None:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)

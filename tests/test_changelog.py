@@ -89,3 +89,27 @@ def test_snapshot_diff_null_safe_compare(spark, tmp_path):
     out = {r.k: r.change_type for r in snapshot_diff(before, after, ["k"]).collect()}
     # NULL == NULL must NOT count as change; x -> NULL must
     assert out == {"k2": "update_postimage"}
+
+
+def test_read_infers_each_version_schema_once(spark, tmp_path):
+    """Re-reading one committed version reuses its inferred schema (no
+    footer-reading Spark job); a new version — here one that adds a
+    column — is inferred afresh, and time travel still sees its own."""
+    t = _mk(spark, tmp_path)
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "schema_memo")
+    try:
+        first, again = t.read(), t.read()
+        inferences = len(sc.statusTracker().getJobIdsForGroup("schema_memo"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert inferences == 1
+    assert again.schema == first.schema
+    assert sorted(again.collect()) == sorted(first.collect())
+    t.merge(
+        spark.createDataFrame([("r3", "e.py", 20, "eps", 7)], SCHEMA + ", stars long"),
+        ["repo", "path"],
+        epoch_id=3,
+    )
+    assert "stars" in t.read().columns
+    assert "stars" not in t.read(version=2).columns

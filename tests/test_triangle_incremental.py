@@ -127,3 +127,19 @@ def test_redelivery_and_crash_replay(spark, stores):
     }
     # full redelivery is a no-op
     assert maintain_triangle_count(edges, stats, epoch_id="e1", **batch)["skipped"]
+
+
+def test_stats_row_found_by_metric_not_position(spark, stores):
+    """The stats table is keyed by ``metric``; another metric's row,
+    stored first, must not be read as the triangle counts."""
+    edges, stats = stores
+    other = spark.createDataFrame(
+        [("aaa_other", 1000, 1000)], "metric string, n_triangles long, n_edges long"
+    )
+    stats.merge(other, ["metric"], epoch_id="other")
+    build_triangle_state(edges, stats, _pairs(spark, [(1, 2), (2, 3)]), epoch_id="seed")
+    maintain_triangle_count(
+        edges, stats, _pairs(spark, [(1, 3)]), _pairs(spark, []), epoch_id="e1"
+    )
+    rows = {r.metric: (r.n_triangles, r.n_edges) for r in stats.read().collect()}
+    assert rows == {"aaa_other": (1000, 1000), "triangles": (1, 3)}
